@@ -80,16 +80,15 @@ object Validate {
     * (`requireValid`). */
   def attrPreds(datoms: DataFrame,
       preds: Map[String, Seq[(String, Column)]]): DataFrame = {
-    val isAssert =
-      if (datoms.columns.contains("op")) col("op") else lit(true)
+    val withOp = graft.store.Store.withOp(datoms)
     val checks = preds.toSeq.sortBy(_._1).flatMap { case (attr, ps) =>
       ps.map { case (name, valid) =>
-        when(isAssert && col("a") === attr && !coalesce(valid, lit(false)),
+        when(col("op") && col("a") === attr && !coalesce(valid, lit(false)),
           lit(name)) }
     }
     if (checks.isEmpty)
-      datoms.withColumn("errors", array().cast("array<string>"))
-    else datoms.withColumn("errors", array_compact(array(checks: _*)))
+      withOp.withColumn("errors", array().cast("array<string>"))
+    else withOp.withColumn("errors", array_compact(array(checks: _*)))
   }
 
   /** Datomic-grain `:db.attr/preds`: the whole TRANSACTION aborts when

@@ -878,12 +878,10 @@ object Relational {
     * isolated, ~6.4 s in-suite under memory pressure. At sf1
     * (15 M-datom log): r9 42.6 s → r10 ~32.5 s (broadcast(dead) pin +
     * a stats split) → r11 ~27 s by replacing the full re-resolve
-    * with the live-index merge: the r10 remainder was ~21 s of
-    * resolve re-shuffling every datom through two keyed string
-    * aggregations; resolveIncrementalHybrid's no-snapshot-shuffle
-    * branch turns that into size-guard-pinned broadcast anti-join
-    * probes of the batch against a never-reshuffled state scan, plus
-    * an attr-pruned re-resolve of the card-one touched keys. At sf10
+    * with the live-index merge (`Store.resolveIncremental`):
+    * size-guard-pinned broadcast anti-join probes of the batch
+    * against a never-reshuffled state scan, plus an attr-pruned
+    * re-resolve of the card-one touched keys. At sf10
     * (150 M datoms): 263 → ~220 s, and the decade run is what forced
     * the final shape — the one-pass stats below behind an explicit
     * same-key repartition (fusing scan + probes + partial aggregation
@@ -930,13 +928,11 @@ object Relational {
       .withColumn("tx", lit(1L)).withColumn("op", lit(true))
     val targets = o.filter(pmod(col("o_orderkey"), lit(100)) === 0)
       .select(concat(lit("o"), col("o_orderkey").cast("string")).as("e"))
-    // materialize the retraction batch ONCE and EAGERLY: the hybrid
-    // merge below probes it from five places (touched keys, safe-
-    // branch anti joins, delta resolution, full-log union), and a
-    // lazy checkpoint would run the state scan + dedupe INSIDE the
-    // merge job, stacking its aggregation maps onto the merge
-    // stage's execution memory; a production store reads the
-    // committed tx batch here
+    // materialize the retraction batch ONCE and EAGERLY: the merge
+    // below reads it as its delta and again inside the full log, and
+    // a lazy checkpoint would run the state scan + dedupe INSIDE the
+    // merge jobs, stacking its aggregation maps onto their execution
+    // memory; a production store reads the committed tx batch here
     val retractions = graft.store.Store.retractEntityTx(
       log, targets, componentAttrs = Seq("order/line"), tx = 2L)
       .localCheckpoint()
@@ -945,14 +941,12 @@ object Relational {
     // re-resolve: the synthesized log (all asserts at tx 1, unique per
     // key by construction) IS the resolved basis snapshot — exactly
     // what a production store maintains — so the retraction batch
-    // merges through resolveIncrementalHybrid: card-one retraction
-    // keys (∝ the batch) re-resolve from attr-pruned history, the
-    // card-many retractions anti-join the snapshot via the
-    // no-snapshot-shuffle merge. The old shape re-shuffled all ~15 M
-    // datoms (sf1) through resolve's two keyed aggregations — the
-    // 21 s line item; state is now scanned with broadcast probes and
-    // never re-shuffled, which is the point of a live index.
-    val resolved = graft.store.Store.resolveIncrementalHybrid(
+    // merges through resolveIncremental: card-one retraction keys
+    // (∝ the batch) re-resolve from attr-pruned history, the
+    // card-many retractions anti-join the snapshot. State is scanned
+    // with broadcast probes and never re-shuffled, which is the point
+    // of a live index.
+    val resolved = graft.store.Store.resolveIncremental(
       snapshot = log, basisTx = 1L, delta = retractions,
       fullLog = log.unionByName(retractions), manyAttrs = manyAttrs)
       .select(col("a"), col("e"), col("v_long"))
@@ -1338,7 +1332,7 @@ object Relational {
     * FULL mix of shapes — card-one re-asserts, card-one RETRACTIONS
     * (the hybrid carve-out: their older value must resurface from
     * pre-snapshot history the snapshot no longer carries), card-many
-    * retractions and asserts — via `resolveIncrementalHybrid`, and
+    * retractions and asserts — via `resolveIncremental`, and
     * the result must equal full resolution computed independently by
     * DuckDB. Population design keeps every shape disjoint where it
     * matters (the re-assert set excludes the retraction set, so
@@ -1376,7 +1370,7 @@ object Relational {
     val many = Seq("order/tag")
     val snapshot = Store.resolve(hist, many).localCheckpoint()
     val full = hist.unionByName(delta)
-    Store.resolveIncrementalHybrid(snapshot, 2L, delta, full, many)
+    Store.resolveIncremental(snapshot, 2L, delta, full, many)
       .groupBy(col("a"))
       .agg(count(lit(1)).as("n_datoms"),
         coalesce(sum(col("v_long")), lit(0L)).cast("long").as("total_cents"),
@@ -1886,7 +1880,7 @@ object Relational {
     * `restore-db`: rebuild current state COLD from the full log
     * (`Store.resolve` — the restore path) and compare it, in-engine,
     * against the LIVE incrementally-maintained view
-    * (`resolveIncrementalHybrid` over a basis snapshot + delta — the
+    * (`resolveIncremental` over a basis snapshot + delta — the
     * path the running system serves reads from). The two answers come
     * from different code paths with different shuffle shapes, so
     * `agrees` is a real independent cross-check, not a tautology; the
@@ -1940,7 +1934,7 @@ object Relational {
     val full = hist.unionByName(delta)
     val restored = Store.resolve(full, many)                       // cold path
     val snapshot = Store.resolve(hist, many).localCheckpoint()
-    val live = Store.resolveIncrementalHybrid(snapshot, 2L, delta, full, many)
+    val live = Store.resolveIncremental(snapshot, 2L, delta, full, many)
     def audit(df: DataFrame) = df.groupBy(col("a")).agg(
       count(lit(1)).as("n_datoms"),
       coalesce(sum(col("v_long")), lit(0L)).cast("long").as("total_cents"),
@@ -2231,8 +2225,8 @@ object Relational {
     * The rank/out-degree tables are ∝ |nodes|, which is DATA-
     * DEPENDENT: small here (a bounded page universe), unbounded on an
     * arbitrary event log. So the broadcast is a size-GUARDED hint,
-    * not unconditional (the [[graft.store.Store.retractEntityTx]]
-    * `broadcastDeadMaxRows` discipline): node count is measured once
+    * not unconditional (the size-guarded dead-set broadcast of
+    * [[graft.store.Store.retractEntityTx]]): node count is measured once
     * (one cheap distinct-count over the edge keys, amortized across
     * all 3 rounds) and oversize graphs fall back to shuffle joins —
     * rank-partitioned SortMergeJoin per round, correct at any scale.

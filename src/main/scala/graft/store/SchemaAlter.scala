@@ -29,16 +29,15 @@ object SchemaAlter {
     *     remove it, retractions of a pre-flip SUPERSEDED value are
     *     stale and no-op.
     *
-    * Scale shape: one pass over each log half — the prefix resolve is
-    * the standard two-aggregation collapse, the suffix merges
-    * incrementally against the bounded snapshot (shuffle ∝ live state
-    * + delta, not history). Card-one retractions of OTHER attributes
-    * in the suffix keep full-resolve semantics via the hybrid path's
-    * touched-key carve-out. */
+    * Scale shape: one pass over each log half — the prefix resolve,
+    * then the suffix merges through `Store.resolveIncremental` against
+    * that bounded snapshot (the live state is never re-shuffled).
+    * Card-one retractions of OTHER attributes in the suffix keep
+    * full-resolve semantics via the merge's touched-key carve-out. */
   def resolveCardFlip(log: DataFrame, attr: String, alterTx: Long,
       manyAttrs: Seq[String]): DataFrame = {
     val pre = Store.resolve(log.filter(col("tx") <= alterTx), manyAttrs)
-    Store.resolveIncrementalHybrid(pre, alterTx, log.filter(col("tx") > alterTx),
+    Store.resolveIncremental(pre, alterTx, log.filter(col("tx") > alterTx),
       log, manyAttrs :+ attr)
   }
 

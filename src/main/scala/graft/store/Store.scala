@@ -43,14 +43,11 @@ final class Store(spark: SparkSession, val dir: String) {
     val raw =
       if (exists) spark.read.parquet(eavPath)
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Store.schema)
-    // logs written before retraction support have no op column: assert
-    if (raw.columns.contains("op")) raw else raw.withColumn("op", lit(true))
+    Store.withOp(raw)
   }
 
   def append(datoms: DataFrame): Unit = {
-    val withOp =
-      if (datoms.columns.contains("op")) datoms else datoms.withColumn("op", lit(true))
-    withOp.select(Store.schema.fieldNames.map(col): _*)
+    Store.withOp(datoms).select(Store.schema.fieldNames.map(col): _*)
       .write.mode(SaveMode.Append).partitionBy("a").parquet(eavPath)
     markSnapshotStale()
   }
@@ -86,9 +83,7 @@ final class Store(spark: SparkSession, val dir: String) {
   def appendWithTupleAttrs(datoms: DataFrame, registry: SchemaRegistry): Unit = {
     val composites = registry.attrs.values.filter(_.tupleAttrs.nonEmpty).toSeq.sortBy(_.ident)
     if (composites.isEmpty) { append(datoms); return }
-    val withOp =
-      if (datoms.columns.contains("op")) datoms else datoms.withColumn("op", lit(true))
-    val batch = withOp.localCheckpoint()
+    val batch = datoms.localCheckpoint()
     append(batch)
     val txRow = batch.agg(max(col("tx"))).collect()(0)
     val tx = if (txRow.isNullAt(0)) 0L else txRow.getLong(0)
@@ -188,7 +183,7 @@ final class Store(spark: SparkSession, val dir: String) {
   /** Cached resolved snapshot behind `current` — Datomic's live-index-
     * vs-log distinction: the log is the durable record, the current
     * view is a MAINTAINED index, not something every query rebuilds.
-    * Without it each query pays resolve's two full-log shuffles; with
+    * Without it each query pays resolve's full-log shuffle; with
     * it the first `current` call materializes the snapshot and every
     * later read scans it. Keyed by the registry's card-many attr set
     * (a different registry is a different resolution). Invalidated by
@@ -220,9 +215,9 @@ final class Store(spark: SparkSession, val dir: String) {
   private def markSnapshotStale(): Unit = synchronized { snapStale = true }
 
   /** Current-state view: card-many attrs accumulate (distinct union),
-    * card-one attrs resolve last-writer-wins by tx — one shuffle,
-    * grouped by (e, a). Served from the maintained snapshot when the
-    * store hasn't changed since the last call. */
+    * card-one attrs resolve last-writer-wins by tx — one shuffle.
+    * Served from the maintained snapshot when the store hasn't changed
+    * since the last call. */
   def current(registry: SchemaRegistry): DataFrame = synchronized {
     val many = registry.attrs.values.filter(_.many).map(_.ident).toSet
     def rebuild(): DataFrame = {
@@ -243,38 +238,25 @@ final class Store(spark: SparkSession, val dir: String) {
         // so prove it with row counts: old rows + delta rows must
         // equal the log's current row count — any out-of-order append
         // breaks the equation and falls back to a full re-resolve.
-        // ONE aggregation job answers everything the merge needs
-        // (total rows, delta rows, card-one-retraction count, and the
-        // new basis tx) — a per-read prelude of several log scans would
-        // be real money on a 100 TB log.
+        // ONE aggregation job answers the guard and the new basis tx —
+        // a per-read prelude of several log scans would be real money
+        // on a 100 TB log.
+        val log = eav // one file listing for the guard and the merge
         val isDelta = col("tx") > snapBasis
-        val isUnsafeRetract = isDelta && !col("op") &&
-          (if (many.isEmpty) lit(true) else !col("a").isInCollection(many.toSeq))
-        val g = eav.agg(
+        val g = log.agg(
           count(lit(1)).as("total"),
           sum(isDelta.cast("long")).as("delta_rows"),
-          sum(isUnsafeRetract.cast("long")).as("unsafe_rows"),
           max(col("tx")).as("new_basis")).collect()(0)
         val newRows = g.getLong(0)
         val deltaRows = if (g.isNullAt(1)) 0L else g.getLong(1)
-        val unsafeRows = if (g.isNullAt(2)) 0L else g.getLong(2)
-        val newBasis = if (g.isNullAt(3)) 0L else g.getLong(3)
-        val delta = eav.filter(isDelta)
+        val newBasis = if (g.isNullAt(2)) 0L else g.getLong(2)
         if (snapRows + deltaRows == newRows) {
-          // card-ONE retractions in the delta can resurface an older
-          // value the snapshot no longer carries — those (e, a) keys
-          // re-resolve from full history (hybrid), everything else
-          // merges snapshot + tail. Eager localCheckpoint:
-          // materializes BEFORE the old snapshot is dropped AND cuts
-          // lineage, so the plan doesn't grow with every increment
-          // (cluster note: swap for reliable checkpoint, same caveat
-          // as the Datalog fixpoints).
-          val merged0 =
-            if (unsafeRows == 0L)
-              Store.resolveIncremental(df, snapBasis, delta, many.toSeq.sorted)
-            else
-              Store.resolveIncrementalHybrid(df, snapBasis, delta, eav, many.toSeq.sorted)
-          val merged = merged0.localCheckpoint()
+          // Eager localCheckpoint: materializes BEFORE the old snapshot
+          // is dropped AND cuts lineage, so the plan doesn't grow with
+          // every increment (cluster note: swap for reliable
+          // checkpoint, same caveat as the Datalog fixpoints).
+          val merged = Store.resolveIncremental(df, snapBasis, log.filter(isDelta), log,
+            many.toSeq.sorted).localCheckpoint()
           df.unpersist(blocking = false)
           snapshot = Some((many, merged)); snapBasis = newBasis; snapRows = newRows
           snapStale = false; lastCurrentIncremental = true
@@ -406,360 +388,200 @@ object Store {
     if (r.isNullAt(0)) -1L else r.getLong(0)
   }
 
-  /** Resolution core shared by `current` / `asOf` (and the q30/q39
-    * harness queries), retraction-aware:
+  /** The rule for logs without an `op` column (logs written before
+    * retraction support, datom frames built by callers): every row is
+    * an assert. */
+  private[graft] def withOp(log: DataFrame): DataFrame =
+    if (log.columns.contains("op")) log else log.withColumn("op", lit(true))
+
+  /** Row-count ceiling for pinning a batch-sized key set as a broadcast
+    * (retraction dead sets, incremental-merge key probes). The sets are
+    * ∝ the tx batch, so the pin keeps the probes map-side; without it
+    * AQE abandons the broadcast past its ~10 MB threshold and plans
+    * SortMergeJoin shuffles of the full state (measured at sf10: two
+    * extra state shuffles and an execution-memory OOM in-suite).
+    * Outsize sets fall back to shuffle joins, which stay correct at
+    * any scale. */
+  private val BroadcastMaxRows = 5000000L
+
+  private def pinned(keys: DataFrame, rows: Long): DataFrame =
+    if (rows <= BroadcastMaxRows) broadcast(keys) else keys
+
+  /** Current-state resolution, behind `current` / `asOf` and the
+    * harness queries, retraction-aware:
     *  - a value (e, a, v) is VISIBLE iff its latest op by tx is an
     *    assert (a retraction hides exactly the value it names; a
     *    later re-assert restores it);
     *  - card-many current = all visible values;
     *  - card-one current = the visible value with the greatest
     *    last-assert tx.
-    * Two keyed aggregations — (e, a, v) then (e, a) — both with
-    * map-side partials; the first collapses the log before the
-    * second, so the shape holds at scale. A log without retractions
-    * resolves identically to plain last-writer-wins. */
-  def resolve(log: DataFrame, manyAttrs: Seq[String]): DataFrame = {
-    // single-horizon fast path: no horizon explode, no asof_tx riding
-    // the two wide aggregations — the common current-state read should
-    // not pay the audit machinery
-    val withOp =
-      if (log.columns.contains("op")) log else log.withColumn("op", lit(true))
-    resolveCore(withOp, manyAttrs)
-  }
-
-  /** INCREMENTAL resolution — Datomic's live-index model: merge an
-    * already-resolved snapshot with a log DELTA (datoms with
-    * tx > `basisTx`) instead of re-resolving the full history.
-    * Snapshot rows re-enter the resolution as asserts AT the basis —
-    * sound because (a) the snapshot already collapsed everything at or
-    * before the basis, and (b) every delta event is strictly later, so
-    * per-(e,a,v) latest-event and per-(e,a) latest-assert orderings
-    * against snapshot rows are decided by the basis/delta tx gap
-    * alone. Delta retractions of card-MANY values kill their snapshot
-    * rows; stale retractions (naming a value the snapshot no longer
-    * carries) land in their own empty group and are no-ops, exactly
-    * as in a full resolve.
-    *
-    * SOUNDNESS LIMIT — card-ONE retractions: full resolution lets an
-    * older unretracted value RESURFACE when the current one is
-    * retracted (the PropertySpec reference model), but the snapshot
-    * has already discarded superseded values, so a delta that retracts
-    * a card-one datom cannot be merged by THIS path — `current`
-    * detects that shape and routes it to
-    * [[resolveIncrementalHybrid]], which re-resolves only the touched
-    * (e, a) keys from full history and merges the rest incrementally.
-    * Loader workloads are assert-only, so this pure-merge path is the
-    * common case. Cost: shuffle ∝ |current state| + |delta| — on a
-    * history-heavy 100 TB log this is the difference between
-    * re-reading every superseded version and touching only live rows
-    * plus the tail. */
-  def resolveIncremental(snapshot: DataFrame, basisTx: Long, delta: DataFrame,
-      manyAttrs: Seq[String]): DataFrame =
-    resolveIncremental(snapshot, basisTx, delta, manyAttrs,
-      deltaMayRetractCardOne = true)
-
-  /** `deltaMayRetractCardOne = false` is the LIVE-INDEX fast path: the
-    * caller asserts the delta contains no card-one retractions (the
-    * hybrid's safe branch guarantees it by construction — those keys
-    * were carved out; assert-only loader batches satisfy it trivially).
-    * Under that contract the merge needs NO snapshot shuffle at all:
-    * every delta event is strictly later than every snapshot row, so a
-    * snapshot row survives iff the delta never touches its key —
-    * card-one (e, a) superseded by any delta assert, card-many
-    * (e, a, v) owned by whichever delta event is latest — and the
-    * delta resolves among itself. One scan of the snapshot with two
-    * anti-join probes of delta-derived key sets (AQE broadcasts them
-    * when the batch is small — un-hinted, the set size follows the
-    * batch) plus a resolveCore ∝ |delta|: shuffle cost follows the
-    * BATCH, not the store. The generic path (default) shuffles
-    * snapshot ∪ delta through the two keyed aggregations — correct
-    * for any delta, but at 100 TB it re-shuffles the entire live
-    * state per merge, which is exactly what a live index must not do. */
-  def resolveIncremental(snapshot: DataFrame, basisTx: Long, delta: DataFrame,
-      manyAttrs: Seq[String], deltaMayRetractCardOne: Boolean,
-      broadcastDeltaKeysMaxRows: Long = 5000000L): DataFrame = {
-    val snapState = snapshot
-      .select(col("e"), col("a"), col("v"), col("v_long"), col("is_ref"))
-    val withOp =
-      if (delta.columns.contains("op")) delta else delta.withColumn("op", lit(true))
-    val deltaLog = withOp.select(
-      col("e"), col("a"), col("v"), col("v_long"), col("is_ref"), col("tx"), col("op"))
-    if (deltaMayRetractCardOne) {
-      val snapAsLog = snapState
-        .withColumn("tx", lit(basisTx)).withColumn("op", lit(true))
-      resolveCore(snapAsLog.unionByName(deltaLog), manyAttrs)
-    } else {
-      val manyCol =
-        if (manyAttrs.isEmpty) lit(false) else col("a").isInCollection(manyAttrs)
-      // size-guarded broadcast pin on the key probes (the
-      // retractEntityTx discipline): the fast path's contract is a
-      // batch-sized delta, so one count (∝ batch) buys map-side
-      // anti-joins — without the pin AQE abandons the conversion past
-      // its ~10 MB threshold and plans SortMergeJoin shuffles of the
-      // full snapshot, the exact cost this path exists to remove
-      // (measured at sf10: +2 state shuffles, execution OOM
-      // in-suite). Outsize deltas fall back to shuffle joins, which
-      // stay correct at any scale.
-      val nDelta = deltaLog.count()
-      def hinted(df: DataFrame): DataFrame =
-        if (nDelta <= broadcastDeltaKeysMaxRows) broadcast(df) else df
-      val oneTouched = deltaLog.filter(!manyCol)
-        .select(col("e"), col("a")).distinct()
-      val manyTouched = deltaLog.filter(manyCol)
-        .select(col("e"), col("a"), col("v")).distinct()
-      val snapKept = snapState.filter(!manyCol)
-        .join(hinted(oneTouched), Seq("e", "a"), "left_anti")
-        .unionByName(snapState.filter(manyCol)
-          .join(hinted(manyTouched), Seq("e", "a", "v"), "left_anti"))
-      snapKept.unionByName(resolveCore(deltaLog, manyAttrs))
-    }
-  }
-
-  /** Incremental resolution WITH card-one retractions in the delta —
-    * the hybrid path closing [[resolveIncremental]]'s soundness limit.
-    * A card-ONE retraction needs the pre-snapshot runner-up value
-    * (full resolution lets an older unretracted value resurface), so
-    * the (e, a) keys it touches are carved out and re-resolved from
-    * the FULL log; everything else merges snapshot + delta as usual.
-    *
-    * Scale shape: the touched key set is bounded by the delta (tx
-    * batches, not data volume) → both anti-joins and the full-log
-    * semi-join broadcast it; the full-log scan is first pruned to the
-    * touched ATTRIBUTES' partitions (a driver-side distinct over the
-    * key set's attrs — bounded by the schema's card-one attr count),
-    * so re-resolution reads the touched attrs' history, not the log. */
-  def resolveIncrementalHybrid(snapshot: DataFrame, basisTx: Long, delta: DataFrame,
-      fullLog: DataFrame, manyAttrs: Seq[String],
-      broadcastTouchedMaxRows: Long = 5000000L): DataFrame = {
-    val withOp =
-      if (delta.columns.contains("op")) delta else delta.withColumn("op", lit(true))
-    val manyCol =
-      if (manyAttrs.isEmpty) lit(false) else col("a").isInCollection(manyAttrs)
-    val touchedKeys = withOp.filter(!col("op") && !manyCol)
-      .select(col("e"), col("a")).distinct().localCheckpoint(false)
-    // ONE driver job answers both bounded questions: the attr list
-    // (attr-level pruning for the history re-read — retraction
-    // batches name few attributes, the log partitions on `a`) and the
-    // key count for the broadcast size guard. The per-attr rollup is
-    // bounded by the schema's card-one attr count, so the collect
-    // stays driver-safe; it also materializes the checkpoint.
-    // Previously these were two jobs (attrs distinct + count).
-    val attrCounts = touchedKeys.groupBy(col("a"))
-      .agg(count(lit(1)).as("n")).collect()
-    val touchedAttrs = attrCounts.map(_.getString(0)).toSeq
-    // size-GUARDED broadcast of the touched keys (the retractEntityTx
-    // broadcastDeadMaxRows discipline): the set is ∝ the tx batch, so
-    // pin map-side probes while it is measurably small, and fall back
-    // to shuffle joins for outsize batches. Without the pin, AQE's
-    // conversion threshold (~10 MB) abandons the broadcast on larger
-    // batches and plans SortMergeJoin shuffles of the full snapshot —
-    // measured at sf10: two extra state shuffles and an
-    // execution-memory OOM in-suite.
-    val tk = if (attrCounts.map(_.getLong(1)).sum <= broadcastTouchedMaxRows)
-      broadcast(touchedKeys) else touchedKeys
-    // the safe branch's delta has NO card-one retractions BY
-    // CONSTRUCTION (exactly those keys were carved out above) → the
-    // no-snapshot-shuffle merge applies: the live state is scanned
-    // once with anti-join probes, never re-shuffled
-    val safe = resolveIncremental(
-      snapshot.join(tk, Seq("e", "a"), "left_anti"), basisTx,
-      withOp.join(tk, Seq("e", "a"), "left_anti"), manyAttrs,
-      deltaMayRetractCardOne = false)
-    val touched = resolve(
-      fullLog.filter(col("a").isInCollection(touchedAttrs))
-        .join(tk, Seq("e", "a"), "left_semi"), manyAttrs)
-    safe.unionByName(touched)
-  }
+    * A log without retractions resolves identically to plain
+    * last-writer-wins. */
+  def resolve(log: DataFrame, manyAttrs: Seq[String]): DataFrame =
+    resolveKernel(log, manyAttrs, Seq(lit(true)))
+      .filter(col("s0").isNotNull)
+      .select(col("e"), col("a"), col("s0.*")).drop("tx")
 
   /** Resolution at SEVERAL transaction horizons in ONE pass — the
-    * audit/reporting shape ("state at end of each month"): the log
-    * scans once, each datom fans out to the horizons that can see it,
-    * and the same two keyed aggregations run with `asof_tx` prefixed
-    * to their keys. N horizons cost one scan + shuffle ∝ visible
-    * rows, not N separate resolve jobs. Output adds `asof_tx`. */
+    * audit/reporting shape ("state at end of each month"): one scan,
+    * one shuffle ∝ the log, not N resolve jobs. Output adds
+    * `asof_tx`. */
   def resolveAtHorizons(log: DataFrame, horizons: Seq[Long],
-      manyAttrs: Seq[String]): DataFrame = {
-    require(horizons.nonEmpty, "need at least one horizon")
-    val withOp =
-      if (log.columns.contains("op")) log else log.withColumn("op", lit(true))
-    resolveCoreHorizons(withOp, horizons, "asof_tx", since = false, manyAttrs)
-  }
+      manyAttrs: Seq[String]): DataFrame =
+    atHorizons(log, horizons, manyAttrs, "asof_tx", col("tx") <= _)
 
   /** `d/since` resolution at several horizons in one pass — the
-    * incremental-consumer mirror of [[resolveAtHorizons]]: each datom
-    * fans out to the horizons it was asserted AFTER (`tx > since_tx`),
-    * and latest-wins resolution runs over only that suffix of the
-    * log. Matches Datomic's since-db semantics: an entity whose
-    * current value predates the horizon is invisible, not stale —
-    * since filters the log, it does not rewind it. Same cost shape:
-    * one scan, shuffle ∝ visible rows. Output adds `since_tx`. */
+    * incremental-consumer mirror of [[resolveAtHorizons]]: latest-wins
+    * resolution over only the log suffix asserted AFTER each horizon
+    * (`tx > since_tx`). Matches Datomic's since-db semantics: an
+    * entity whose current value predates the horizon is invisible,
+    * not stale — since filters the log, it does not rewind it. Output
+    * adds `since_tx`. */
   def sinceAtHorizons(log: DataFrame, horizons: Seq[Long],
-      manyAttrs: Seq[String]): DataFrame = {
+      manyAttrs: Seq[String]): DataFrame =
+    atHorizons(log, horizons, manyAttrs, "since_tx", col("tx") > _)
+
+  /** Horizon views: the kernel computes every horizon's state side by
+    * side, and the horizon column materializes by exploding the
+    * COLLAPSED state at the very end. Duplicate horizons collapse. */
+  private def atHorizons(log: DataFrame, horizons: Seq[Long], manyAttrs: Seq[String],
+      hname: String, vis: Long => Column): DataFrame = {
     require(horizons.nonEmpty, "need at least one horizon")
-    val withOp =
-      if (log.columns.contains("op")) log else log.withColumn("op", lit(true))
-    resolveCoreHorizons(withOp, horizons, "since_tx", since = true, manyAttrs)
+    val hs = horizons.distinct
+    val perHorizon = hs.zipWithIndex.map { case (h, i) =>
+      struct(lit(h).as("h"), col(s"s$i").as("s")) }
+    resolveKernel(log, manyAttrs, hs.map(vis))
+      .select(col("e"), col("a"), explode(array(perHorizon: _*)).as("x"))
+      .filter(col("x.s").isNotNull)
+      .select(col("x.h").as(hname), col("e"), col("a"), col("x.s.*")).drop("tx")
   }
 
-  /** The shared two-aggregation core.
-    * Tiebreaks are EXPLICIT in both pick orderings — a bare max_by
-    * keeps the first-encountered row among ties, which is partition-
-    * order-dependent (caught by PropertySpec's reference model):
+  /** THE resolution kernel — the only (e, a, v) collapse and the only
+    * card-one pick behind every read. `vis` holds one visibility
+    * predicate per horizon; the output is (e, a, s0 … sN-1), where
+    * `si` is the value visible at horizon i as struct(tx = its last
+    * assert tx, v, v_long, is_ref), or null when none is.
+    *
+    * Tiebreaks are EXPLICIT in both picks — a bare max_by keeps the
+    * first-encountered row among ties, which is partition-order-
+    * dependent (caught by PropertySpec's reference model):
     *  - same-tx assert+retract of one datom → assert wins (op=true
     *    sorts above false); Datomic rejects that tx shape outright,
     *    we resolve it deterministically;
     *  - same-tx double-assert on a card-one attr → max v wins.
     *
-    * Plan shape (round 13): the old form aggregated with
-    * `max_by(struct(op, v_long, is_ref), struct(tx, op))` — struct-typed
-    * aggregation buffers are not UnsafeRow-mutable, so BOTH aggregations
-    * planned as SortAggregate (a full sort of the log by (e, a, v) and a
-    * second sort of the collapsed state by (e, a)), behind two separate
-    * exchanges. Decomposed as below, every first-aggregation buffer is a
-    * mutable primitive — HashAggregate, no sort — and the explicit
-    * repartition on `e` (a subset of BOTH aggregations' grouping keys;
-    * NOT (e, a) — single-attr logs constant-fold `a` to a literal,
-    * which breaks the exchange/grouping semantic match and re-inserts
-    * the second exchange) satisfies both distributions, so the whole
-    * resolve runs behind ONE exchange; only the card-one pick still
-    * sorts, over the collapsed state rather than the raw log. Semantics are unchanged:
-    *  - visible iff latest event by (tx, op) is an assert ⇔
-    *    max assert-tx ≥ max retract-tx (tie → assert, as before);
-    *  - the surviving (v_long, is_ref) ride a max_by ordered by the
-    *    (tx, op) pair packed into one long — exact, not an assumption
-    *    of per-(e,a,v) constancy. Store txs are non-negative and far
-    *    below 2^62 (Datomic t's fit in 2^42), so the shift is safe. */
-  private def resolveCore(tagged: DataFrame,
-      manyAttrs: Seq[String]): DataFrame = {
-    val ord = shiftleft(col("tx"), 1) + col("op").cast("long")
-    val latest = tagged.repartition(col("e"))
-      .groupBy(col("e"), col("a"), col("v"))
-      .agg(
-        max(when(col("op"), col("tx"))).as("assert_tx"),
-        max(when(!col("op"), col("tx"))).as("retract_tx"),
-        max_by(col("v_long"), ord).as("v_long"),
-        max_by(col("is_ref"), ord).as("is_ref"))
-      .filter(col("assert_tx").isNotNull &&
-        (col("retract_tx").isNull || col("assert_tx") >= col("retract_tx")))
-    val one = latest.filter(!col("a").isInCollection(manyAttrs))
-      .groupBy(col("e"), col("a"))
-      .agg(max_by(struct(col("v"), col("v_long"), col("is_ref")),
-        struct(col("assert_tx"), col("v"))).as("s"))
-      .select(col("e"), col("a"), col("s.v").as("v"),
-        col("s.v_long").as("v_long"), col("s.is_ref").as("is_ref"))
-    val many = latest.filter(col("a").isInCollection(manyAttrs))
-      .select(col("e"), col("a"), col("v"), col("v_long"), col("is_ref"))
-    one.unionByName(many)
-  }
-
-  /** Multi-horizon resolution WITHOUT the horizon explode: the old
-    * shape fanned every log row out to its visible horizons BEFORE the
-    * first aggregation, so N horizons shuffled and aggregated N× the
-    * log. Here the single (e, a, v) collapse computes each horizon's
-    * latest-event state as N conditional aggregate columns (all
-    * primitive buffers — HashAggregate), the card-one pick runs per
-    * horizon inside one sorted pass keyed (e, a), and the horizon
-    * column materializes by exploding the COLLAPSED state at the very
-    * end. One exchange total (see [[resolveCore]]), shuffle ∝ the log,
-    * not N× the log. `since = true` flips the visibility predicate to
-    * `tx > h` (d/since); duplicate horizons collapse as the explode
-    * form did. Output and tiebreak semantics are byte-identical. */
-  private def resolveCoreHorizons(withOp: DataFrame, horizons: Seq[Long],
-      hname: String, since: Boolean, manyAttrs: Seq[String]): DataFrame = {
-    val hs = horizons.distinct.zipWithIndex
-    def vis(h: Long) = if (since) col("tx") > h else col("tx") <= h
-    val ord = shiftleft(col("tx"), 1) + col("op").cast("long")
-    val aggs = hs.flatMap { case (h, i) => Seq(
-      max(when(col("op") && vis(h), col("tx"))).as(s"at$i"),
-      max(when(!col("op") && vis(h), col("tx"))).as(s"rt$i"),
-      max_by(col("v_long"), when(vis(h), ord)).as(s"vl$i"),
-      max_by(col("is_ref"), when(vis(h), ord)).as(s"ir$i")) }
-    val grouped = withOp.repartition(col("e"))
+    * Plan shape: every collapse buffer is a mutable primitive — the
+    * surviving (v_long, is_ref) ride max_by's ordered by the (tx, op)
+    * pair packed into one long — so the collapse plans as
+    * HashAggregate, never a sort of the raw log. The explicit
+    * repartition on `e` is a subset of BOTH aggregations' keys, so
+    * resolution runs behind ONE exchange at any horizon count; not
+    * (e, a), because single-attr logs constant-fold `a` to a literal,
+    * which breaks the exchange/grouping match and re-inserts a second
+    * exchange. Only the card-one pick sorts (a struct buffer), over
+    * the collapsed state. */
+  private def resolveKernel(log: DataFrame, manyAttrs: Seq[String],
+      vis: Seq[Column]): DataFrame = {
+    // the packing orders (tx, op) exactly only for 0 ≤ tx < 2^62
+    // (Datomic t's fit in 2^42); a negative tx fails loudly
+    val ord = when(col("tx") >= 0, shiftleft(col("tx"), 1) + col("op").cast("long"))
+      .otherwise(raise_error(
+        concat(lit("resolve needs tx >= 0, got "), col("tx").cast("string"))))
+    val aggs = vis.zipWithIndex.flatMap { case (p, i) => Seq(
+      max(when(col("op") && p, col("tx"))).as(s"at$i"),
+      max(when(!col("op") && p, col("tx"))).as(s"rt$i"),
+      max_by(col("v_long"), when(p, ord)).as(s"vl$i"),
+      max_by(col("is_ref"), when(p, ord)).as(s"ir$i")) }
+    val perValue = withOp(log).repartition(col("e"))
       .groupBy(col("e"), col("a"), col("v"))
       .agg(aggs.head, aggs.tail: _*)
-    def visible(i: Int) = col(s"at$i").isNotNull &&
-      (col(s"rt$i").isNull || col(s"at$i") >= col(s"rt$i"))
-    def state(i: Int) = struct(col("v").as("v"),
-      col(s"vl$i").as("v_long"), col(s"ir$i").as("is_ref"))
-    def unpack(df: DataFrame) = df
-      .filter(col("x.s").isNotNull)
-      .select(col("x.h").as(hname), col("e"), col("a"),
-        col("x.s.v").as("v"), col("x.s.v_long").as("v_long"),
-        col("x.s.is_ref").as("is_ref"))
-    val onePicks = hs.map { case (_, i) =>
-      max_by(when(visible(i), state(i)),
-        when(visible(i), struct(col(s"at$i"), col("v")))).as(s"pick$i") }
-    val one = unpack(grouped.filter(!col("a").isInCollection(manyAttrs))
-      .groupBy(col("e"), col("a"))
-      .agg(onePicks.head, onePicks.tail: _*)
-      .select(col("e"), col("a"), explode(array(hs.map { case (h, i) =>
-        struct(lit(h).as("h"), col(s"pick$i").as("s")) }: _*)).as("x")))
-    val many = unpack(grouped.filter(col("a").isInCollection(manyAttrs))
-      .select(col("e"), col("a"), explode(array(hs.map { case (h, i) =>
-        struct(lit(h).as("h"), when(visible(i), state(i)).as("s")) }: _*)).as("x")))
+    // visible iff the latest event is an assert ⇔ last assert-tx ≥
+    // last retract-tx (a tie goes to the assert)
+    val states = vis.indices.map { i =>
+      val (at, rt) = (col(s"at$i"), col(s"rt$i"))
+      when(at.isNotNull && (rt.isNull || at >= rt), struct(at.as("tx"), col("v"),
+        col(s"vl$i").as("v_long"), col(s"ir$i").as("is_ref")))
+    }
+    val isMany = col("a").isInCollection(manyAttrs)
+    // struct max compares fields in order: latest assert tx, then max v
+    val picks = states.zipWithIndex.map { case (s, i) => max(s).as(s"s$i") }
+    val one = perValue.filter(!isMany).groupBy(col("e"), col("a"))
+      .agg(picks.head, picks.tail: _*)
+    val many = perValue.filter(isMany).select(col("e") +: col("a") +:
+      states.zipWithIndex.map { case (s, i) => s.as(s"s$i") }: _*)
     one.unionByName(many)
   }
 
-  /** Core of `:db/noHistory` trimming over any log: rows of `nhAttrs`
-    * reduce to their currently-VISIBLE datoms (same per-value
-    * resolution as `resolve` — latest (tx, op) event per (e, a, v)
-    * must be an assert; card-one then keeps the latest assert per
-    * (e, a)); retraction markers and superseded values vanish. Every
-    * other attr passes through untouched. Shuffles key on the
-    * noHistory attrs' datoms only — the full log never re-shuffles. */
+  /** INCREMENTAL resolution — Datomic's live-index model: merge an
+    * already-resolved `snapshot` at `basisTx` with the log `delta`
+    * after it (rows at or before the basis are the snapshot's and are
+    * ignored), instead of re-resolving the full history. Equals
+    * `resolve(fullLog, manyAttrs)` when `fullLog` is the log the
+    * snapshot and the delta came from.
+    *
+    * Every delta event is strictly later than every snapshot row, so
+    * a snapshot row survives iff the delta never touches its key —
+    * card-one (e, a), card-many (e, a, v) — and the delta resolves
+    * among itself: one scan of the snapshot with one anti-join probe
+    * of the batch-sized delta keys plus a resolve ∝ |delta|. The live
+    * state is never re-shuffled; shuffle cost follows the BATCH, not
+    * the store.
+    *
+    * A card-ONE retraction breaks that argument: full resolution lets
+    * an older unretracted value RESURFACE, and the snapshot has
+    * already discarded superseded values. So the (e, a) keys the
+    * delta's card-one retractions touch are carved out of both sides
+    * and re-resolved from `fullLog`, first pruned to the touched
+    * attributes' partitions — the re-read is those attrs' history,
+    * not the log. A delta without card-one retractions (assert-only
+    * loader batches) skips the carve-out. */
+  def resolveIncremental(snapshot: DataFrame, basisTx: Long, delta: DataFrame,
+      fullLog: DataFrame, manyAttrs: Seq[String]): DataFrame = {
+    val isMany = col("a").isInCollection(manyAttrs)
+    val isCut = !col("op") && !isMany
+    val snap = snapshot.select(col("e"), col("a"), col("v"), col("v_long"), col("is_ref"))
+    // the delta feeds the sizing job, the key probes and its own
+    // resolve: materialize it once, in the sizing job
+    val d = withOp(delta).filter(col("tx") > basisTx)
+      .select(col("e"), col("a"), col("v"), col("v_long"), col("is_ref"), col("tx"), col("op"))
+      .localCheckpoint(eager = false)
+    // ONE collected job sizes the merge: per attr (bounded by the
+    // schema), the delta rows and the card-one retractions among them
+    val perAttr = d.groupBy(col("a"))
+      .agg(count(lit(1)), sum(isCut.cast("long"))).collect()
+    val nDelta = perAttr.map(_.getLong(1)).sum
+    val nCut = perAttr.map(_.getLong(2)).sum
+    def merge(state: DataFrame, tail: DataFrame): DataFrame = {
+      val keys = pinned(tail.select(col("e").as("k_e"), col("a").as("k_a"), col("v").as("k_v")),
+        nDelta)
+      state.join(keys, col("e") === col("k_e") && col("a") === col("k_a") &&
+          (!isMany || col("v") === col("k_v")), "left_anti")
+        .unionByName(resolve(tail, manyAttrs))
+    }
+    if (nCut == 0L) merge(snap, d)
+    else {
+      val cutAttrs = perAttr.filter(_.getLong(2) > 0).map(_.getString(0)).toSeq
+      val cut = pinned(d.filter(isCut).select(col("e"), col("a")), nCut)
+      merge(snap.join(cut, Seq("e", "a"), "left_anti"), d.join(cut, Seq("e", "a"), "left_anti"))
+        .unionByName(resolve(fullLog.filter(col("a").isInCollection(cutAttrs))
+          .join(cut, Seq("e", "a"), "left_semi"), manyAttrs))
+    }
+  }
+
+  /** Core of `:db/noHistory` trimming over a store log (the 7
+    * `schema` columns): rows of `nhAttrs` reduce to their currently-
+    * VISIBLE datoms — the kernel's per-value collapse and card-one
+    * pick, each kept datom restored at its last assert tx — so
+    * retraction markers and superseded values vanish. Every other attr
+    * passes through untouched. Shuffles key on the noHistory attrs'
+    * datoms only — the full log never re-shuffles. */
   def dropNoHistory(log: DataFrame, nhAttrs: Seq[String],
       nhManyAttrs: Seq[String]): DataFrame = {
-    val withOp =
-      if (log.columns.contains("op")) log else log.withColumn("op", lit(true))
-    val cols = withOp.columns
-    val nhRows = withOp.filter(col("a").isInCollection(nhAttrs))
-    val isMany =
-      if (nhManyAttrs.isEmpty) lit(false) else col("a").isInCollection(nhManyAttrs)
-    // Fast shape for the standard datom schema (see resolveCore's plan
-    // note): primitive-buffer aggregates → HashAggregate for the
-    // per-value collapse, one shared (e, a) exchange for both
-    // aggregations. The surviving row's tx is its last assert-tx (the
-    // visible winner by (tx, op) IS the latest assert) and its op is
-    // true by construction, so the row reconstructs exactly. Logs with
-    // extra caller columns keep the generic struct-pick shape.
-    val kept = if (cols.toSet == Set("e", "a", "v", "v_long", "is_ref", "tx", "op")) {
-      val ord = shiftleft(col("tx"), 1) + col("op").cast("long")
-      val perValue = nhRows.repartition(col("e"))
-        .groupBy(col("e"), col("a"), col("v"))
-        .agg(
-          max(when(col("op"), col("tx"))).as("assert_tx"),
-          max(when(!col("op"), col("tx"))).as("retract_tx"),
-          max_by(col("v_long"), ord).as("v_long"),
-          max_by(col("is_ref"), ord).as("is_ref"))
-        .filter(col("assert_tx").isNotNull &&
-          (col("retract_tx").isNull || col("assert_tx") >= col("retract_tx")))
-      def restore(df: DataFrame) = df.select(
-        col("e"), col("a"), col("v"), col("v_long"), col("is_ref"),
-        col("assert_tx").as("tx"), lit(true).as("op"))
-      restore(perValue.filter(isMany))
-        .unionByName(restore(perValue
-          .filter(!isMany)
-          .groupBy(col("e"), col("a"))
-          .agg(max_by(struct(col("v"), col("v_long"), col("is_ref"),
-            col("assert_tx")), struct(col("assert_tx"), col("v"))).as("s"))
-          .select(col("e"), col("a"), col("s.v").as("v"),
-            col("s.v_long").as("v_long"), col("s.is_ref").as("is_ref"),
-            col("s.assert_tx").as("assert_tx"))))
-    } else {
-      def all = struct(cols.map(col): _*)
-      val perValue = nhRows
-        .groupBy(col("e"), col("a"), col("v"))
-        .agg(max_by(all, struct(col("tx"), col("op"))).as("s"))
-        .select(col("s.*"))
-        .filter(col("op"))
-      perValue.filter(isMany)
-        .unionByName(perValue
-          .filter(!isMany)
-          .groupBy(col("e"), col("a"))
-          .agg(max_by(all, struct(col("tx"), col("v"))).as("s"))
-          .select(col("s.*")))
-    }
-    withOp.filter(!col("a").isInCollection(nhAttrs)).unionByName(kept)
+    val isNh = col("a").isInCollection(nhAttrs)
+    val kept = resolveKernel(log.filter(isNh), nhManyAttrs, Seq(lit(true)))
+      .filter(col("s0").isNotNull)
+      .select(col("e"), col("a"), col("s0.*"), lit(true).as("op"))
+    withOp(log).filter(!isNh).unionByName(kept)
   }
 
   /** AVET index-range scan (Datomic `d/index-range`): the datoms of
@@ -965,9 +787,7 @@ object Store {
     * resolution pass over (visible state + tx rows) — the tx side is
     * typically tiny, so the union adds no shuffle of its own. */
   def withDb(state: DataFrame, txData: DataFrame, manyAttrs: Seq[String]): DataFrame = {
-    val aligned =
-      if (txData.columns.contains("op")) txData else txData.withColumn("op", lit(true))
-    resolve(state.unionByName(aligned, allowMissingColumns = true), manyAttrs)
+    resolve(state.unionByName(withOp(txData), allowMissingColumns = true), manyAttrs)
   }
 
   /** The maintenance datoms ONE batch implies for ONE composite — the
@@ -985,9 +805,7 @@ object Store {
     * set; cost follows the batch, not the log. */
   def tupleMaintenanceTx(logAfter: DataFrame, batch: DataFrame, tupleAttr: String,
       srcAttrs: Seq[String], tx: Long): DataFrame = {
-    val withOp =
-      if (batch.columns.contains("op")) batch else batch.withColumn("op", lit(true))
-    val touched = withOp.filter(col("a").isInCollection(srcAttrs))
+    val touched = batch.filter(col("a").isInCollection(srcAttrs))
       .select(col("e")).distinct()
     val srcState = resolve(
       logAfter.filter(col("a").isInCollection(srcAttrs))
@@ -1160,7 +978,7 @@ object Store {
     * their component closure), not by corpus size, so the dead-datom
     * scan pins `broadcast(dead)` whenever the closure-loop row counts
     * (already computed to answer the emptiness check) stay under
-    * `broadcastDeadMaxRows` — one pass over state, two map-side hash
+    * `BroadcastMaxRows` — one pass over state, two map-side hash
     * probes, ZERO shuffles of state. Without the pin, size estimation
     * over the localCheckpointed frontiers crossed the broadcast
     * threshold at sf1 and planned two SortMergeJoins, i.e. two full
@@ -1168,8 +986,7 @@ object Store {
     * BENCH_sf1 r9). Oversized requests fall back to shuffle joins,
     * which stay correct at any scale. */
   def retractEntityTx(state: DataFrame, targets: DataFrame,
-      componentAttrs: Seq[String], tx: Long,
-      broadcastDeadMaxRows: Long = 5000000L): DataFrame = {
+      componentAttrs: Seq[String], tx: Long): DataFrame = {
     // Each closure frontier is materialized ONCE (lazy localCheckpoint
     // forced by the count that also answers the emptiness check and
     // feeds the broadcast-size guard); the accumulated dead set stays
@@ -1203,14 +1020,13 @@ object Store {
       }
     }
     val deadUnion = frontiers.reduce(_ unionByName _)
-    val dead =
-      if (deadRows <= broadcastDeadMaxRows) broadcast(deadUnion) else deadUnion
+    val dead = pinned(deadUnion, deadRows)
     // One scan of state: mark entity hits and inbound-ref hits via two
     // map-side probes of the same broadcast dead set, then dedupe on
-    // the (e, a, v) KEY over a narrow projection. v_long/is_ref are
+    // the (e, a, v) KEY over a narrow projection: v_long/is_ref are
     // functionally determined by (e, a, v) and tx/op are rewritten
-    // here, so a row-level distinct over full-width rows (the old
-    // shape) shuffled the long entity-id strings twice for nothing.
+    // here, so a full-width row distinct would shuffle the long
+    // entity-id strings for nothing.
     state
       .join(dead.select(col("e").as("__dead_e")),
         col("e") === col("__dead_e"), "left")

@@ -145,6 +145,30 @@ class PlanSpec extends AnyFunSuite {
     assert(!(third eq second) && third.count() == 3)
   }
 
+  test("store resolve: one exchange for current and 3-horizon reads; the (e, a, v) collapse never sorts") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.store.Store
+    // card-one attrs only: a card-many split pushes its attr filter
+    // below the repartition, so each cardinality class would shuffle
+    // its own rows behind its own exchange
+    val log = Seq(("e1", "x/p", "1", 1L, true), ("e1", "x/p", "2", 2L, true),
+        ("e2", "x/q", "a", 1L, true), ("e2", "x/q", "a", 3L, false))
+      .toDF("e", "a", "v", "tx", "op")
+      .withColumn("v_long", lit(null).cast("long")).withColumn("is_ref", lit(false))
+      .select(Store.schema.fieldNames.map(col): _*)
+    val collapse = """SortAggregate\(key=\[[^\]]*\bv#\d+""".r
+    for ((name, df) <- Seq(
+        "resolve" -> Store.resolve(log, Seq.empty),
+        "resolveAtHorizons" -> Store.resolveAtHorizons(log, Seq(1L, 2L, 3L), Seq.empty))) {
+      val p = plan(df)
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
+      assert(exchanges == 1, s"$name: expected ONE exchange, got $exchanges:\n$p")
+      assert(p.contains("HashAggregate"), p)
+      assert(collapse.findFirstIn(p).isEmpty, s"$name: the (e, a, v) collapse sorts:\n$p")
+    }
+  }
+
   test("d43: cell self-join is hash-keyed; only the centroid broadcast nests; census broadcasts") {
     val p = plan(graft.queries.Llm.d43_semdedup(spark, sf))
     assert(!p.contains("CartesianProduct"),

@@ -200,9 +200,8 @@ class PropertySpec extends AnyFunSuite {
     val genLog = Gen.choose(1, 25).flatMap(n => Gen.listOfN(n, genDatom))
     val basis = 3L
     samples(genLog, 60).foreach { rows0 =>
-      // the incremental contract excludes card-ONE retractions in the
-      // delta (current() guards and rebuilds there) — flip those to
-      // asserts so every generated case is a mergeable shape
+      // safe deltas: flip card-ONE retractions to asserts, so every
+      // generated delta merges without the touched-key carve-out
       val rows = rows0.map { case (e, a, v, tx, op) =>
         if (tx > basis && !op && a != "many1") (e, a, v, tx, true) else (e, a, v, tx, op)
       }
@@ -215,15 +214,8 @@ class PropertySpec extends AnyFunSuite {
       val full = toSet(graft.store.Store.resolve(df, Seq("many1")))
       val snap = graft.store.Store.resolve(df.filter(col("tx") <= basis), Seq("many1"))
       val inc = toSet(graft.store.Store.resolveIncremental(
-        snap, basis, df.filter(col("tx") > basis), Seq("many1")))
+        snap, basis, df.filter(col("tx") > basis), df, Seq("many1")))
       assert(inc === full, s"log: $rows")
-      // same contract through the no-snapshot-shuffle merge (the
-      // deltas here are mergeable by construction, so the fast path's
-      // anti-join formulation must agree with the generic re-resolve)
-      val incFast = toSet(graft.store.Store.resolveIncremental(
-        snap, basis, df.filter(col("tx") > basis), Seq("many1"),
-        deltaMayRetractCardOne = false))
-      assert(incFast === full, s"fast-path log: $rows")
     }
   }
 
@@ -241,9 +233,9 @@ class PropertySpec extends AnyFunSuite {
     val genLog = Gen.choose(1, 25).flatMap(n => Gen.listOfN(n, genDatom))
     val basis = 3L
     // UNLIKE the safe-delta case no shape is rewritten: generated
-    // deltas carry card-one retractions, the exact pattern the plain
-    // incremental merge cannot handle (an older value must resurface
-    // from pre-snapshot history)
+    // deltas carry card-one retractions, whose keys the merge must
+    // carve out (an older value must resurface from pre-snapshot
+    // history)
     samples(genLog, 60).foreach { rows =>
       val df = rows.toDF("e", "a", "v", "tx", "op")
         .withColumn("v_long", lit(null).cast("long"))
@@ -253,7 +245,7 @@ class PropertySpec extends AnyFunSuite {
           .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
       val full = toSet(graft.store.Store.resolve(df, Seq("many1")))
       val snap = graft.store.Store.resolve(df.filter(col("tx") <= basis), Seq("many1"))
-      val hyb = toSet(graft.store.Store.resolveIncrementalHybrid(
+      val hyb = toSet(graft.store.Store.resolveIncremental(
         snap, basis, df.filter(col("tx") > basis), df, Seq("many1")))
       assert(hyb === full, s"log: $rows")
     }
@@ -278,12 +270,13 @@ class PropertySpec extends AnyFunSuite {
     st.append(datoms(Seq(("e1", "p/one", "v1", 1L, true), ("e1", "p/one", "v2", 2L, true))))
     st.current(reg).count() // build the maintained snapshot
     // tx3 retracts v2: v1 must RESURFACE, and the merge must be the
-    // hybrid incremental path, not a full rebuild
+    // incremental path (with its touched-key carve-out), not a full
+    // rebuild
     st.retract(datoms(Seq(("e1", "p/one", "v2", 3L, true))).drop("op"))
     val got = st.current(reg).select("e", "a", "v").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(st.lastCurrentIncremental,
-      "card-one retraction should take the hybrid incremental path")
+      "card-one retraction should take the incremental path")
     assert(got === Set(("e1", "p/one", "v1")))
     val fullResolve = Store.resolve(st.eav, Seq.empty)
       .select("e", "a", "v").collect()

@@ -50,6 +50,18 @@ class TxFnSpec extends AnyFunSuite {
     assert(resolved === Map("e1" -> "150", "e2" -> "200", "e3" -> "300"))
   }
 
+  test("resolve: a negative tx fails loudly instead of mis-ordering events") {
+    val log = datoms(("e1", "p", "10", 1L), ("e1", "p", "20", -2L))
+    def raises(df: org.apache.spark.sql.DataFrame) = {
+      val err = intercept[Exception](df.collect())
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("resolve needs tx >= 0, got -2")), err)
+    }
+    raises(Store.resolve(log, Seq.empty))
+    raises(Store.resolveAtHorizons(log, Seq(1L, 2L), Seq.empty))
+  }
+
   test("sinceAtHorizons: log suffix per horizon; orphan retraction stays invisible") {
     // e1 re-asserted at tx2; e2 untouched after tx1; e3 new at tx3;
     // e4 asserted tx1 then retracted tx2

@@ -122,6 +122,12 @@ class UpsertSpec extends AnyFunSuite {
 
   test("current(): snapshot maintains incrementally on appends; out-of-order rebuilds; retractions go hybrid") {
     import spark.implicits._
+    import graft.model.AttrDef
+    // the two attrs this test touches, with their schema.edn cardinality
+    def attr(ident: String, many: Boolean) = ident -> AttrDef(ident, "string", many,
+      uniqueIdentity = false, uniqueValue = false, component = false, fulltext = false)
+    val registry = new SchemaRegistry(Map(
+      attr("release/name", many = false), attr("release/artists", many = true)))
     val store = new Store(spark, java.nio.file.Files.createTempDirectory("incsnap").toString)
     def datoms(rows: (String, String, String, Long)*) =
       rows.toDF("e", "a", "v", "tx")
@@ -154,7 +160,7 @@ class UpsertSpec extends AnyFunSuite {
     store.append(datoms(("b3", "release/name", "Early", 1L)))
     assert(cur() === full())
     assert(!store.lastCurrentIncremental, "an out-of-order tx must fail the count guard")
-    // card-one retraction in the delta: the hybrid path re-resolves the
+    // card-one retraction in the delta: the merge re-resolves the
     // touched (e, a) keys from full history — full semantics RESURFACE
     // the older unretracted value (the PropertySpec reference model),
     // which the discarded-history snapshot alone could never produce —
@@ -163,7 +169,7 @@ class UpsertSpec extends AnyFunSuite {
     val c4 = cur()
     assert(c4 === full())
     assert(store.lastCurrentIncremental,
-      "a card-one retraction takes the hybrid incremental path, not a rebuild")
+      "a card-one retraction takes the incremental path, not a rebuild")
     assert(c4(("b1", "release/name", "Old")),
       "retracting the current value resurfaces the superseded one")
   }
